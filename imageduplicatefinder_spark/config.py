@@ -83,7 +83,6 @@ class DedupConfig:
     # giant bands (empty files, license headers) otherwise create
     # O(n^2) pair blowup on one key (north_rule: skew handled explicitly).
     max_band_size: int = 256
-    shuffle_partitions: int = 32
 
     # --- clustering --------------------------------------------------
     # "labelprop": min-label propagation, O(diameter) rounds, one

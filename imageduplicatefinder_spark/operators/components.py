@@ -19,19 +19,15 @@ without it the plan doubles per iteration and the job dies at scale
 (SURVEY.md §4 hard part (a)).
 
 Driver-job economy (the round-3 F ~= 32 s job-submit constant,
-BENCH.md): two levers were implemented and MEASURED this round, and
-the measurements say to keep per-round checks the default —
+BENCH.md): two levers were implemented and MEASURED, and the
+measurements say to check convergence after every round —
 
-- ``check_every`` batches k propagation rounds into one convergence-
-  check action (rounds build lazily; the monotone label sum stalls iff
-  every round in the block was a no-op, so batching cannot mis-detect
-  convergence). Measured at sf0.1 (simhash_radius_clusters, 4724
-  clusters): k=2 SLOWS the query 13 s -> 19-23 s — a no-op round still
-  shuffles the full label table, and detecting convergence needs the
-  sum to stall across a whole block, so k=2 pays ~2 extra full rounds.
-  The saved job submits (~0.2 s each) never repay that at this or any
-  larger scale. Default is therefore 1; k>1 is for latency-bound
-  many-tiny-graph callers only.
+- batching k propagation rounds into one convergence-check action
+  SLOWED simhash_radius_clusters at sf0.1 from 13 s to 19-23 s at
+  k=2: a no-op round still shuffles the full label table, and
+  detecting convergence needs the sum to stall across a whole block,
+  so k=2 pays ~2 extra full rounds. The saved job submits (~0.2 s
+  each) never repaid that at any scale tried, so the lever was removed.
 - disabling AQE for the loop (fewer per-stage driver jobs: 69 -> 24 on
   the same query) was measured at 38-78 s for the identical result —
   AQE's runtime broadcast of the per-round label join and its
@@ -96,7 +92,6 @@ def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
     on_nonconverged: str = "raise",
-    check_every: int = 1,
     driver_max_edges: int = CC_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """edges(src:long, dst:long) -> (doc_id:long, cluster_id:long).
@@ -112,27 +107,15 @@ def connected_components(
     into several clusters, so the default is to ``raise``; pass
     ``on_nonconverged="warn"`` to log and return the partial labels.
 
-    ``check_every`` batches that many propagation rounds into ONE Spark
-    action (the convergence check). Correctness is unaffected — the
-    monotone label sum stalls iff every round in the block was a no-op
-    — but each batched block costs up to check_every-1 extra full
-    propagation rounds before convergence is visible, and a no-op round
-    shuffles the whole label table. Default 1 (check every round): the
-    extra rounds measured strictly slower than the saved job submits at
-    every scale tried (module docstring). Raise it only for
-    latency-bound workloads on tiny graphs.
-
     At or below ``driver_max_edges`` edges (see ``CC_DRIVER_MAX_EDGES``)
     the computation dispatches to one bounded driver pass with the
     exact same output; the driver kernel computes the true fixpoint, so
-    ``max_iterations``/``on_nonconverged``/``check_every`` only govern
-    the distributed rounds beyond the bound (or when
-    ``driver_max_edges=0`` forces them).
+    ``max_iterations``/``on_nonconverged`` only govern the distributed
+    rounds beyond the bound (or when ``driver_max_edges=0`` forces
+    them).
     """
     if on_nonconverged not in ("raise", "warn"):
         raise ValueError(f"unknown on_nonconverged {on_nonconverged!r}")
-    if check_every < 1:
-        raise ValueError(f"check_every must be >= 1, got {check_every}")
     # bounded-size dispatch (CC_DRIVER_MAX_EDGES): the count runs over a
     # lazily checkpointed edge frame so the (possibly expensive) edge
     # lineage computes once and both the driver kernel and the
@@ -167,27 +150,20 @@ def connected_components(
 
     converged = False
     prev_sum = label_sum(labels)
-    rounds_since_check = 0
-    for i in range(max_iterations):
+    for _ in range(max_iterations):
         # neighbor messages: label(a) offered to b
         msgs = sym.join(labels, sym.a == labels.node).select(
             F.col("b").alias("node"), "label"
         )
-        # lazy checkpoint: unchecked rounds stay unmaterialized and
-        # run inside the next check's single action (lineage still
-        # truncates at each round's checkpoint when that action
-        # computes them)
+        # lazy checkpoint: the round materializes inside the
+        # convergence check's action, which truncates its lineage
         labels = (
             msgs.union(labels.select("node", "label"))
             .groupBy("node")
             .agg(F.min("label").alias("label"))
             .localCheckpoint(eager=False)
         )
-        rounds_since_check += 1
-        if rounds_since_check < check_every and i < max_iterations - 1:
-            continue
         new_sum = label_sum(labels)
-        rounds_since_check = 0
         if new_sum == prev_sum:
             converged = True
             break

@@ -72,10 +72,11 @@ import logging
 import warnings
 from itertools import combinations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, GroupedData
 from pyspark.sql import functions as F
 
 from imageduplicatefinder_spark.functions.fingerprints import hamming_distance_col
+from imageduplicatefinder_spark.operators.similarity import _tile_groups, _tile_sides
 
 _LOG = logging.getLogger(__name__)
 
@@ -229,14 +230,6 @@ def sketch_keys(
     )
 
 
-# back-compat alias for the single-chunk form (m=1, radius+1 chunks)
-def sketch_chunks(sketches: DataFrame, radius: int,
-                  sketch_col: str = "simhash") -> DataFrame:
-    """(sketch, chunk_id, chunk_val) for the radius+1 single-bit-chunk
-    pigeonhole keys — ``sketch_keys`` with n_agree=1."""
-    return sketch_keys(sketches, radius, n_agree=1, sketch_col=sketch_col)
-
-
 def capped_sketch_keys(
     keys: DataFrame, max_key_group: int
 ) -> tuple[DataFrame, DataFrame]:
@@ -284,36 +277,22 @@ def _popcount64(x):
     return (x * h01) >> np.uint64(56)
 
 
-def _tile_groups(src: DataFrame, n_sk: int) -> tuple[DataFrame, int]:
-    """Replicate the distinct-sketch table into B(B+1)/2 unordered
-    block-pair groups (the ``blocked_cosine_pairs`` shape): every
-    unordered sketch pair occurs in EXACTLY one (gi, gj) group, so the
-    tile kernels need no cross-tile dedup."""
+def _sketch_tiles(src: DataFrame, n_sk: int) -> GroupedData:
+    """The distinct-sketch table in ``_tile_groups``' block-pair layout
+    (the ``blocked_cosine_pairs`` shape), ~``_TILE_BLOCK_ROWS`` sketches
+    per block: every unordered sketch pair occurs in EXACTLY one tile,
+    so the tile kernels need no cross-tile dedup."""
     n_blocks = max(1, min(64, -(-n_sk // _TILE_BLOCK_ROWS)))
-    base = src.select(
-        "sketch",
-        F.pmod(F.xxhash64("sketch"), F.lit(n_blocks)).alias("_blk"),
-    )
-    rep = base.withColumn(
-        "_p", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    ).select(
-        F.least("_blk", "_p").alias("_gi"),
-        F.greatest("_blk", "_p").alias("_gj"),
-        "sketch",
-        "_blk",
-    )
-    return rep, n_blocks
+    return _tile_groups(src.select("sketch"), "sketch", n_blocks)
 
 
-def _tile_sides(key: tuple, pdf, np):
-    """(A, B) int64 sketch arrays for one tile: the full block for a
-    diagonal tile (A is B), the two distinct blocks otherwise."""
-    gi, gj = int(key[0]), int(key[1])
+def _tile_sketches(key: tuple, pdf):
+    """(A, B, diagonal) int64 sketch arrays of one tile."""
+    import numpy as np
+
+    a, b, diag = _tile_sides(key, pdf)
     sk = pdf["sketch"].to_numpy(dtype=np.int64)
-    if gi == gj:
-        return sk, sk, True
-    left = pdf["_blk"].to_numpy() == gi
-    return sk[left], sk[~left], False
+    return sk[a], sk[b], diag
 
 
 def _close_pairs_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
@@ -326,11 +305,11 @@ def _close_pairs_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    rep, _ = _tile_groups(src, n_sk)
+    tiles = _sketch_tiles(src, n_sk)
     r = int(radius)
 
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        A, B, diag = _tile_sides(key, pdf, np)
+        A, B, diag = _tile_sketches(key, pdf)
         out_a: list[np.ndarray] = []
         out_b: list[np.ndarray] = []
         out_h: list[np.ndarray] = []
@@ -360,7 +339,7 @@ def _close_pairs_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
             }
         )
 
-    return rep.groupBy("_gi", "_gj").applyInPandas(
+    return tiles.applyInPandas(
         tile, "sk_a long, sk_b long, hamming long"
     )
 
@@ -387,11 +366,11 @@ def _forest_edges_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    rep, _ = _tile_groups(src, n_sk)
+    tiles = _sketch_tiles(src, n_sk)
     r = int(radius)
 
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        A, B, diag = _tile_sides(key, pdf, np)
+        A, B, diag = _tile_sketches(key, pdf)
         if not len(A) or not len(B):
             return pd.DataFrame(columns=["sk_a", "sk_b"])
         # local close pairs as node indices into the tile's node list
@@ -425,7 +404,7 @@ def _forest_edges_tiles(src: DataFrame, radius: int, n_sk: int) -> DataFrame:
             {"sk_a": np.minimum(xa, xb), "sk_b": np.maximum(xa, xb)}
         )
 
-    return rep.groupBy("_gi", "_gj").applyInPandas(
+    return tiles.applyInPandas(
         tile, "sk_a long, sk_b long"
     )
 

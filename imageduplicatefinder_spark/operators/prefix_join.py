@@ -107,12 +107,6 @@ def _slice_prefixes(per_doc: DataFrame, threshold: float,
     )
 
 
-def _doc_prefixes(indexed: DataFrame, threshold: float) -> DataFrame:
-    """Single-threshold convenience form of ``_doc_toks`` +
-    ``_slice_prefixes`` (standalone callers/tests)."""
-    return _slice_prefixes(_doc_toks(indexed), threshold)
-
-
 def prefix_candidates(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(src, dst) candidate pairs, src < dst — an EXACT superset of all
     pairs satisfying the verify rule ``jaccard >= cfg.jaccard_threshold

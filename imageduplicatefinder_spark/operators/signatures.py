@@ -42,23 +42,31 @@ def add_doc_id(df: DataFrame) -> DataFrame:
     return df.withColumn("doc_id", F.xxhash64("repo", "path", "commit"))
 
 
-def _widen_if_narrow(df: DataFrame, source: DataFrame) -> DataFrame:
-    """Repartition when the source scan is narrower than the cluster.
+def widen_if_narrow(df: DataFrame, key: str = "doc_id") -> DataFrame:
+    """Repartition a scan narrower than the cluster before CPU-dense
+    per-row work (sha256, the fingerprint UDF, tokenize/md5/gram
+    builds) — the one home of the "is this input too narrow?" rule.
 
-    CPU-bound stages (sha256, the fingerprint UDF) serialize on a
-    single core when the input is one parquet file / one cached
-    partition. inputFiles() is metadata-only (an rdd.getNumPartitions()
-    probe triggers an extra job under AQE); non-file sources report 0
-    files and are small, so they are widened too. At real scale the
-    source has thousands of files and this is a no-op.
+    One parquet file with one row group (the catalog testdata tables,
+    a single cached partition) plans 1-2 scan tasks, so every
+    expression fused into the scan stage serializes on 1-2 cores
+    regardless of core count. Fewer input files than
+    ``defaultParallelism`` -> ``repartition(2 x parallelism, key)``:
+    one small shuffle buys full-width map stages, and hash-partitioning
+    by ``key`` lets downstream per-key aggregations reuse the exchange.
+    inputFiles() is metadata-only (an rdd.getNumPartitions() probe
+    triggers an extra job under AQE) and sees through filters and
+    projections to the scanned files; non-file sources report 0 files
+    and are small, so they are widened too. At real scale the source
+    has more files than cores and this returns ``df`` unchanged.
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
     try:
-        n_files = len(source.inputFiles())
+        n_files = len(df.inputFiles())
     except Exception:  # noqa: BLE001 - conservative: widen on unknown sources
         n_files = 0
     if n_files < parallelism:
-        return df.repartition(parallelism * 2, "doc_id")
+        return df.repartition(parallelism * 2, key)
     return df
 
 
@@ -78,7 +86,7 @@ def hash_documents(
     df = documents
     if langs:
         df = df.filter(F.col("lang").isin(langs))
-    df = _widen_if_narrow(add_doc_id(df), documents)
+    df = widen_if_narrow(add_doc_id(df))
     return df.select(
         "doc_id",
         "repo",
@@ -114,7 +122,7 @@ def compute_signatures(
     df = add_doc_id(df)
 
     if widen:
-        df = _widen_if_narrow(df, documents)
+        df = widen_if_narrow(df)
 
     fp = make_fingerprint_udf(cfg)
     df = df.select(

@@ -30,9 +30,49 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, GroupedData
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _tile_groups(
+    df: DataFrame, key: str, n_blocks: int, partition_col: str | None = None
+) -> GroupedData:
+    """The block-pair tile layout shared by every tiled all-pairs
+    kernel: each row is hashed into one of ``n_blocks`` blocks
+    (``_blk``), replicated once per partner block, and grouped by the
+    unordered block pair (``_gi`` <= ``_gj``). Every unordered row pair
+    then occurs in EXACTLY one group — a same-block pair only in
+    (i, i), a cross-block pair only in (i, j), i < j, as a cross
+    product of the two sides (``_tile_sides``) — so no kernel needs a
+    cross-tile distinct(). ``partition_col`` leads the grouping, so
+    pairs only form within equal values of it (SemDeDup's
+    within-cluster mode)."""
+    rep = df.withColumn(
+        "_blk", F.pmod(F.xxhash64(F.col(key)), F.lit(n_blocks))
+    ).withColumn("_p", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
+    payload = [c for c in df.columns if c != partition_col]
+    part = [partition_col] if partition_col else []
+    return rep.select(
+        F.least("_blk", "_p").alias("_gi"),
+        F.greatest("_blk", "_p").alias("_gj"),
+        *payload,
+        "_blk",
+        *part,
+    ).groupBy(*part, "_gi", "_gj")
+
+
+def _tile_sides(key: tuple, pdf: pd.DataFrame):
+    """(A, B, diagonal) row indices of one ``_tile_groups`` tile: a
+    diagonal tile (gi == gj) pairs its rows with themselves — A is B,
+    and the kernel keeps one orientation per pair — an off-diagonal
+    tile pairs block gi's rows with block gj's."""
+    gi, gj = int(key[-2]), int(key[-1])
+    if gi == gj:
+        rows = np.arange(len(pdf))
+        return rows, rows, True
+    left = pdf["_blk"].to_numpy() == gi
+    return np.nonzero(left)[0], np.nonzero(~left)[0], False
 
 
 def blocked_cosine_pairs(
@@ -76,54 +116,39 @@ def blocked_cosine_pairs(
     """
     part = [F.col(partition_col).alias("_part")] if partition_col else []
     base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("_blk"),
-        *part,
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"), *part
     )
-    rep = base.withColumn(
-        "_p", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    ).select(
-        F.least("_blk", "_p").alias("_gi"),
-        F.greatest("_blk", "_p").alias("_gj"),
-        "_id",
-        "_vec",
-        "_blk",
-        *(["_part"] if partition_col else []),
-    )
+    tiles = _tile_groups(base, "_id", n_blocks,
+                         "_part" if partition_col else None)
 
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(key[-2]), int(key[-1])
+        a, b, diag = _tile_sides(key, pdf)
         ids = pdf["_id"].to_numpy(dtype=np.int64)
         mat = np.array(list(pdf["_vec"]), dtype=np.float64)
         norms = np.sqrt((mat * mat).sum(axis=1))
         norms[norms == 0.0] = np.nan
-        if gi == gj:
-            with np.errstate(invalid="ignore"):
-                cos = (mat @ mat.T) / np.outer(norms, norms)
-                mask = (cos >= threshold) & (ids[:, None] < ids[None, :])
-            ai, bi = np.nonzero(mask)
-            a_ids, b_ids = ids[ai], ids[bi]
-        else:
-            left = pdf["_blk"].to_numpy() == gi
-            la, lb = np.nonzero(left)[0], np.nonzero(~left)[0]
-            with np.errstate(invalid="ignore"):
-                cos = (mat[la] @ mat[lb].T) / np.outer(norms[la], norms[lb])
-                mask = cos >= threshold
-            ai, bi = np.nonzero(mask)
-            xa, xb = ids[la][ai], ids[lb][bi]
-            a_ids, b_ids = np.minimum(xa, xb), np.maximum(xa, xb)
+        # mb IS ma on a diagonal tile, so BLAS takes its symmetric
+        # (syrk) path; two copies would take gemm, whose last-ulp
+        # rounding can move a cosine_milli floor
+        ma = mat[a]
+        mb = ma if diag else mat[b]
+        with np.errstate(invalid="ignore"):
+            cos = (ma @ mb.T) / np.outer(norms[a], norms[b])
+            mask = cos >= threshold
+            if diag:
+                mask &= ids[:, None] < ids[None, :]
+        ai, bi = np.nonzero(mask)
+        xa, xb = ids[a][ai], ids[b][bi]
         vals = cos[ai, bi]
         return pd.DataFrame(
             {
-                out_a: a_ids,
-                out_b: b_ids,
+                out_a: np.minimum(xa, xb),
+                out_b: np.maximum(xa, xb),
                 "cosine_milli": np.floor(vals * 1000).astype(np.int64),
             }
         )
 
-    group_cols = (["_part"] if partition_col else []) + ["_gi", "_gj"]
-    return rep.groupBy(*group_cols).applyInPandas(
+    return tiles.applyInPandas(
         tile, f"{out_a} long, {out_b} long, cosine_milli long"
     )
 
@@ -182,21 +207,14 @@ def int_cosine_tile_pairs(
     ascending ``idx_col`` — the builders emit array_sort'ed structs).
     Output: (src, dst, n_shared, dot, cos2_permille), src < dst.
     """
-    base = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(idx_col).alias("_idx"),
-        F.col(val_col).alias("_val"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).alias("_blk"),
-    )
-    rep = base.withColumn(
-        "_p", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-    ).select(
-        F.least("_blk", "_p").alias("_gi"),
-        F.greatest("_blk", "_p").alias("_gj"),
+    tiles = _tile_groups(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.col(idx_col).alias("_idx"),
+            F.col(val_col).alias("_val"),
+        ),
         "_id",
-        "_idx",
-        "_val",
-        "_blk",
+        n_blocks,
     )
     num, den = int(cos2_num), int(cos2_den)
 
@@ -219,17 +237,12 @@ def int_cosine_tile_pairs(
         return mat
 
     def tile(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        gi, gj = int(key[0]), int(key[1])
         out_cols = ["src", "dst", "n_shared", "dot", "cos2_permille"]
         ids = pdf["_id"].to_numpy(dtype=np.int64)
         idx_rows = [np.asarray(v, dtype=np.int64) for v in pdf["_idx"]]
         val_rows = [np.asarray(v, dtype=np.int64) for v in pdf["_val"]]
         mat = _densify32(pdf)
-        if gi == gj:
-            a_sel = b_sel = np.arange(len(pdf))
-        else:
-            left = (pdf["_blk"].to_numpy() == gi)
-            a_sel, b_sel = np.nonzero(left)[0], np.nonzero(~left)[0]
+        a_sel, b_sel, diag = _tile_sides(key, pdf)
         if not len(a_sel) or not len(b_sel):
             return pd.DataFrame(columns=out_cols)
         max_val = max((int(v.max()) for v in val_rows if v.size), default=0)
@@ -261,7 +274,7 @@ def int_cosine_tile_pairs(
         sa = (np.sqrt(n2a.astype(np.float64)) * root).astype(np.float32)
         sb = np.sqrt(n2b.astype(np.float64)).astype(np.float32)
         ai, bi = np.nonzero(D >= sa[:, None] * sb[None, :])
-        if gi == gj:
+        if diag:
             keep = ids[ai] < ids[bi]
             ai, bi = ai[keep], bi[keep]
         rows = []
@@ -284,7 +297,7 @@ def int_cosine_tile_pairs(
                 )
         return pd.DataFrame(rows, columns=out_cols)
 
-    return rep.groupBy("_gi", "_gj").applyInPandas(
+    return tiles.applyInPandas(
         tile,
         "src long, dst long, n_shared long, dot long, cos2_permille long",
     )

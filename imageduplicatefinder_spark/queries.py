@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from imageduplicatefinder_spark.config import DedupConfig
+from imageduplicatefinder_spark.operators.signatures import widen_if_narrow
 from imageduplicatefinder_spark.sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -38,31 +39,6 @@ _STOPWORDS = ["the", "a", "of", "and", "to", "in", "is"]
 
 def _words(col: str = "text") -> Column:
     return F.split(F.col(col), " ")
-
-
-def _widen_docs(docs: DataFrame, key: str = "doc_id") -> DataFrame:
-    """Repartition a narrow documents scan before CPU-dense per-row
-    work (tokenize/md5/gram builds), mirroring the pipeline's
-    ``operators/signatures._widen_if_narrow``.
-
-    The driver testdata ships one parquet file with ONE row group per
-    table, so every expression fused into the scan stage runs on 1-2
-    tasks regardless of core count — at sf1.0 the 13-gram build spent
-    its whole wall there (guide §2.5 input skew: "one huge unsplittable
-    file... repartition immediately after the read"). One small shuffle
-    of (doc_id, text) buys full-width map stages, and hash-partitioning
-    by doc_id lets downstream per-doc aggregations reuse the exchange.
-    At real scale the source has more files than cores and this is a
-    metadata-only no-op."""
-    spark = docs.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        n_files = len(docs.inputFiles())
-    except Exception:  # noqa: BLE001 - conservative: widen unknown sources
-        n_files = 0
-    if n_files < par:
-        return docs.repartition(par * 2, key)
-    return docs
 
 
 def _ngrams_expr(w: Column, n: int) -> Column:
@@ -151,7 +127,7 @@ def _capped_shingle_table(docs: DataFrame, checkpoint: bool = True) -> DataFrame
     assertions; the default lazily materializes twice (pre-cap, so the
     explode runs once for the hot-agg and the anti-join; post-cap, so
     sizes and both self-join sides reuse one result)."""
-    sh = _widen_docs(docs).select("doc_id", _words().alias("w")).select(
+    sh = widen_if_narrow(docs).select("doc_id", _words().alias("w")).select(
         "doc_id", F.explode(_shingles_expr(F.col("w"))).alias("shingle")
     )
     if checkpoint:
@@ -563,9 +539,9 @@ def _char_pairs_bitset(spark: SparkSession, g: DataFrame) -> DataFrame | None:
     ids = ids[order]
     mat = np.vstack([np.asarray(bdf["bits"][i], dtype=np.int64)
                      for i in order]).view(np.uint64)
-    from imageduplicatefinder_spark.operators.verify import _popcount64_np
+    from imageduplicatefinder_spark.operators.hamming_lsh import _popcount64
 
-    pops = _popcount64_np(mat).sum(axis=1).astype(np.int64)
+    pops = _popcount64(mat).sum(axis=1).astype(np.int64)
     bcm = sc.broadcast((ids, mat, pops))
 
     def stripes(batches):
@@ -582,7 +558,7 @@ def _char_pairs_bitset(spark: SparkSession, g: DataFrame) -> DataFrame | None:
                 # chunk the partner sweep to bound temporaries
                 for s in range(i + 1, n_all, 16384):
                     e = min(s + 16384, n_all)
-                    inter = _popcount64_np(
+                    inter = _popcount64(
                         mat_b[i][None, :] & mat_b[s:e]
                     ).sum(axis=1).astype(np.int64)
                     union = pops_b[i] + pops_b[s:e] - inter
@@ -665,7 +641,7 @@ def q_char_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.col("text").substr(i, F.lit(k)),
         )
     )
-    g = _widen_docs(docs).select("doc_id", F.explode(grams).alias("gram"))
+    g = widen_if_narrow(docs).select("doc_id", F.explode(grams).alias("gram"))
     # reused by the df table, sizes, the prefix build and BOTH
     # verification joins — one materialization
     g = g.localCheckpoint(eager=False)
@@ -844,7 +820,7 @@ def _grams13_arrays(docs: DataFrame, *extra_cols: str) -> DataFrame:
     both derive from it, so the construction cannot silently
     desynchronize between the two ops or from the SQL fragment)."""
     return (
-        _widen_docs(docs)
+        widen_if_narrow(docs)
         .select("doc_id", *extra_cols, _words().alias("w"))
         .select(
             "doc_id",
@@ -1506,7 +1482,7 @@ def _winnow_fps(docs: DataFrame) -> DataFrame:
     # materialize the split AND the gram-hash arrays as real columns:
     # Catalyst does not CSE inside HOF lambdas, so inline forms
     # re-evaluate the whole upstream expression per window position
-    staged = _widen_docs(docs).select("doc_id", _words().alias("w")).select(
+    staged = widen_if_narrow(docs).select("doc_id", _words().alias("w")).select(
         "doc_id",
         F.transform(
             _grams_expr(F.col("w")),
@@ -1607,7 +1583,7 @@ def q_minhash_band_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame
     not as the at-scale kernel."""
     B, R = _MINHASH_PORTABLE_BANDS, _MINHASH_PORTABLE_ROWS
     docs = load_table(spark, sf_dir, "documents")
-    staged = _widen_docs(docs).select("doc_id", _words().alias("w")).select(
+    staged = widen_if_narrow(docs).select("doc_id", _words().alias("w")).select(
         "doc_id", _shingles_expr(F.col("w")).alias("sh")
     )
 
@@ -2015,7 +1991,7 @@ def q_unigram_logprob_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back."""
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        _widen_docs(docs).select("doc_id", F.explode(_words()).alias("tok"))
+        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
     )
@@ -2120,7 +2096,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     no cartesian, no window over the corpus, no Python."""
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        _widen_docs(docs).select("doc_id", F.explode(_words()).alias("tok"))
+        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
@@ -2252,7 +2228,7 @@ def q_tfidf_cosine_prefix_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs."""
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        _widen_docs(docs).select("doc_id", F.explode(_words()).alias("tok"))
+        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
@@ -2390,7 +2366,7 @@ def q_tfidf_cosine_dense_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        _widen_docs(docs).select("doc_id", F.explode(_words()).alias("tok"))
+        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
@@ -2494,7 +2470,7 @@ def tfidf_dispatch_choice(
         F.lit(0),
     ).cast("long")
     n_weighted_vocab = (
-        _widen_docs(docs).select("doc_id", F.explode(_words()).alias("tok"))
+        widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("tok"))
         .filter(F.col("tok") != "")
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("tf"))
@@ -2596,7 +2572,7 @@ def q_delta_dedup_new_vs_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     side streams, and nothing is collected. At a real deployment the
     base sides are the dedup index checkpoints, read pre-bucketed."""
     docs = load_table(spark, sf_dir, "documents")
-    keyed = _widen_docs(docs).select(
+    keyed = widen_if_narrow(docs).select(
         "doc_id",
         F.sha2(F.col("text"), 256).alias("h"),
         _token_set_hash().alias("sh"),
@@ -2659,7 +2635,7 @@ def q_source_mirror_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     repos². Everything after is plain keyed aggregation."""
     docs = load_table(spark, sf_dir, "documents")
     classes = (
-        _widen_docs(docs).select("source", _token_set_hash().alias("sh"))
+        widen_if_narrow(docs).select("source", _token_set_hash().alias("sh"))
         .distinct()
     )
     disc = (
@@ -2751,7 +2727,7 @@ def q_cross_source_dup_ownership(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed join re-attaches owners and a final per-source aggregate
     reduces to repo grain."""
     docs = load_table(spark, sf_dir, "documents")
-    keyed = _widen_docs(docs).select(
+    keyed = widen_if_narrow(docs).select(
         "doc_id", "source", _token_set_hash().alias("sh")
     )
     owners = keyed.groupBy("sh").agg(
@@ -2838,7 +2814,7 @@ def q_code_clone_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate state is O(1) per group either way."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        _widen_docs(docs)
+        widen_if_narrow(docs)
         .select("doc_id", F.md5(_clone_canonical()).alias("canon_hash"))
         .groupBy("canon_hash")
         .agg(
@@ -2887,7 +2863,7 @@ def q_type2_clone_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     same output) — kept SQL-expressible here so the operator stays
     inside the cross-engine oracle gate."""
     docs = load_table(spark, sf_dir, "documents")
-    staged = _widen_docs(docs).select(
+    staged = widen_if_narrow(docs).select(
         "doc_id", F.split(_clone_canonical(), " ").alias("w")
     )
     pattern = F.transform(
@@ -3344,7 +3320,7 @@ def q_vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword lists, hot-shingle caps, and tokenizer sanity checks.
     Deterministic top-k: ordered by (df DESC, total DESC, term)."""
     docs = load_table(spark, sf_dir, "documents")
-    occ = _widen_docs(docs).select("doc_id", F.explode(_words()).alias("term"))
+    occ = widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("term"))
     per_doc = occ.groupBy("term", "doc_id").agg(F.count("*").alias("c"))
     stats = per_doc.groupBy("term").agg(
         F.count("*").alias("df"), F.sum("c").alias("total")
@@ -3382,7 +3358,7 @@ def q_top_terms_per_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over per-doc term counts — the per-group top-k shape with a
     corpus-level broadcast side (df table is |vocab| rows)."""
     docs = load_table(spark, sf_dir, "documents")
-    occ = _widen_docs(docs).select("doc_id", F.explode(_words()).alias("term"))
+    occ = widen_if_narrow(docs).select("doc_id", F.explode(_words()).alias("term"))
     tf = occ.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     df_tbl = tf.groupBy("term").agg(F.count("*").alias("df"))
     # no broadcast hint: the df table is |vocabulary| rows — unbounded at
@@ -3530,7 +3506,7 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widen the neighbor side: the 200k-pair dot folds run in the scan
     # stage after the broadcast join, and the single-row-group testdata
     # scan would serialize them on one task
-    c = _widen_docs(emb, key="vec_id").select(
+    c = widen_if_narrow(emb, key="vec_id").select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("ne"),
         F.sqrt(_dot(F.col("embedding"), F.col("embedding"))).alias("nn"),
@@ -4208,7 +4184,7 @@ def _portable_simhash(docs: DataFrame) -> DataFrame:
     # output; measured 2.3x fewer hashed rows at sf1.0). The pair agg
     # keys are uniform, so this holds at any corpus scale.
     cnts = (
-        _widen_docs(docs)
+        widen_if_narrow(docs)
         .select("doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count("*").alias("cnt"))
@@ -4432,7 +4408,7 @@ def q_dedup_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    keyed = _widen_docs(docs).select(
+    keyed = widen_if_narrow(docs).select(
         "doc_id",
         F.sha2(F.col("text"), 256).alias("h"),
         _token_set_hash().alias("sh"),

@@ -208,39 +208,12 @@ def test_cc_driver_dispatch_matches_distributed(spark):
             assert fast == slow, (fn.__name__, es)
 
 
-def test_cc_check_every_parity(spark):
-    # batched convergence checks must produce the identical labeling:
-    # a chain (worst case for min-propagation), disjoint groups, and a
-    # cycle, at check_every = 1 (per-round), 3, and 7 (> rounds needed)
-    cases = [
-        [(i, i + 1) for i in range(9)],
-        [(1, 2), (3, 4), (4, 5), (10, 11), (11, 12), (12, 10)],
-        [(7, 3), (3, 9), (100, 7)],
-    ]
-    for pairs in cases:
-        expected = None
-        for k in (1, 3, 7):
-            rows = connected_components(
-                _edges(spark, pairs), check_every=k, driver_max_edges=0
-            ).collect()
-            got = sorted((r.doc_id, r.cluster_id) for r in rows)
-            if expected is None:
-                expected = got
-            assert got == expected, f"check_every={k} diverged on {pairs}"
-
-
 def test_cc_check_every_restores_session_confs(spark):
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     parts = spark.conf.get("spark.sql.shuffle.partitions")
-    connected_components(_edges(spark, [(1, 2), (2, 3)]), check_every=2,
-                         driver_max_edges=0)
+    connected_components(_edges(spark, [(1, 2), (2, 3)]), driver_max_edges=0)
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
-
-
-def test_cc_check_every_validation(spark):
-    with pytest.raises(ValueError, match="check_every"):
-        connected_components(_edges(spark, [(1, 2)]), check_every=0)
 
 
 def test_band_table_fallback_matches_udf_family(spark):

@@ -4,8 +4,8 @@ The round-3 verdict quantified a F ~= 32 s per-run driver-side
 job-submit constant dominated by connected-components paying one Spark
 job per propagation round per query (VERDICT.md Next #5). This tool
 counts ACTUAL jobs (via a SparkListener-free proxy: the status tracker's
-job IDs) and wall for the CC-shaped queries so the batching lever
-(``check_every`` in operators/components.py) is measured, not asserted.
+job IDs) and wall for the CC-shaped queries, so per-round driver cost
+in operators/components.py is measured, not asserted.
 
 Usage: python tools/bench_cc_jobs.py [sf_dir]
 Prints one JSON line per query: {"query", "wall_sec", "jobs", "rows"}.
